@@ -126,6 +126,26 @@ def test_bmp_decode_rejects_garbage(spark):
     with _pytest.raises(Exception, match="BMP"):
         bmp_decode_payloads(media).collect()
 
+    # truncated 3x2 payloads (header only; half the pixel rows) must
+    # fail loudly in both decode and resize, never decode short rows
+    from talna_spark.pipeline.multimodal import bmp_resize_payloads
+
+    w, h = 3, 2
+    stride = 3 * w + (-(3 * w)) % 4
+    px = bytes(range(stride * h))
+    info = struct.pack(
+        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(px), 2835, 2835, 0, 0
+    )
+    blob = struct.pack("<2sIHHI", b"BM", 54 + len(px), 0, 0, 54) + info + px
+    for cut in (54, 54 + stride * h // 2):
+        truncated = spark.createDataFrame(
+            [(2, "image/bmp", blob[:cut])],
+            "doc_id long, media_type string, payload binary",
+        )
+        for decode in (bmp_decode_payloads, bmp_resize_payloads):
+            with _pytest.raises(Exception, match="past the payload end"):
+                decode(truncated).collect()
+
 
 def test_png_decode_round_trip(spark):
     # decoded fields must equal the DuckDB twin's independent arithmetic
@@ -1242,3 +1262,47 @@ def test_bmp_resize_matches_duckdb_oracle(spark):
     # the corpus exercises both divisible and edge-block dims
     dims = {(r[2], r[3]) for r in got}
     assert len(dims) > 3
+
+
+# ------------------------------------------------ synthesized payload pin
+# md5 of each writer's payloads concatenated in doc_id order at sf0.001.
+# The oracles check only DECODED fields, so a writer change cancelled by
+# a matching parser change would still pass them; this pins the bytes.
+_PAYLOAD_MD5 = {
+    "wav": "5bb571ad529312bb73c6b76feb2ee4d5",
+    "bmp": "009344ad2a32886a3b9e54bfb799a5c4",
+    "png": "7c831639843c6691fe8a2314d2e5fdf8",
+    "jpeg": "4858cf4c735dfa21cf18180dfc2aa562",
+    "avi": "4fbdaf78af5c9395c2f3820cf0c01553",
+    "mjpeg": "e383f67892de36b2a8f4446d491b0364",
+    "flac": "ea56e61c6dc22d8e8f4fe42a30b71094",
+    "pdf": "ee94e34088eabad840ebe035101ae33e",
+    "mp3": "a1f0bdceb3fa68b6615b7c3a87b6ee38",
+    "gif": "cb42ba2ae0227519cf79a0780c69feb7",
+    "layer1": "ac8294996a76c88bded4a31f71807051",
+}
+
+
+def test_synthesized_payload_bytes_are_pinned(spark):
+    import hashlib
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from talna_spark.pipeline import multimodal as mm
+
+    sf = "/root/testdata/sf0.001"
+    tables = [
+        getattr(mm, f"{leg}_media_table")(spark, sf)
+        .select(F.lit(leg).alias("leg"), "doc_id", "payload")
+        for leg in _PAYLOAD_MD5
+    ]
+    by_leg: dict[str, list] = {leg: [] for leg in _PAYLOAD_MD5}
+    for r in reduce(lambda a, b: a.unionByName(b), tables).collect():
+        by_leg[r["leg"]].append((r["doc_id"], bytes(r["payload"])))
+    got = {
+        leg: hashlib.md5(b"".join(p for _, p in sorted(rows))).hexdigest()
+        for leg, rows in by_leg.items()
+    }
+    assert all(len(rows) == 500 for rows in by_leg.values())
+    assert got == _PAYLOAD_MD5
