@@ -11,13 +11,15 @@ The reference merges per-series DESC-ts streams with a k-way heap
 - **greedy** (``B_gr``): the reference's data-anchored segmentation — the
   newest point anchors ``bucket.end`` and a point joins the open bucket
   while ``end - ts <= width`` (inclusive, src/agg/stream.rs:76), else the
-  bucket is emitted and re-anchored at that point. Inherently sequential
-  per group (exactly as the reference, which is single-threaded), so it
-  runs as an Arrow-batched grouped-map pandas UDF: one shuffle on the group
-  tag, then a linear numpy pass per group. Scale caveat: one group's points
-  must fit in a pandas partition; the reference has the identical
-  constraint in time rather than memory. For unbounded groups use aligned
-  mode — the same escape hatch the reference's granularity API offers.
+  bucket is emitted and re-anchored at that point. Sequential per group
+  (as the reference, which is single-threaded): one shuffle on the group,
+  partitions sorted (grp, ts DESC), then ``mapInPandas`` folds each Arrow
+  batch and carries only the open bucket into the next batch, so memory is
+  bounded by the densest bucket, not the group. ``greedy_buckets_sliced``
+  splits huge groups into time slices first and stitches the slice edges in
+  a second pass. All paths share one kernel (``_greedy_stream``), so Python
+  workers must import ``talna_spark`` (``PYTHONPATH`` or the repo root as
+  working directory).
 
 Every bucket carries ``start=min(ts), end=max(ts), len=count`` alongside
 the aggregated ``value`` (O33); ``count`` also reports the count as the
@@ -310,6 +312,166 @@ def _greedy_segment_ids_drop_boundary(ts_desc: np.ndarray, width: int) -> np.nda
     return ids
 
 
+def _breaks(pdf: pd.DataFrame, *cols: str) -> np.ndarray:
+    """True at row 0 and wherever any of ``cols`` changes value: the run
+    starts of a frame sorted on those columns."""
+    out = np.zeros(len(pdf), dtype=bool)
+    out[:1] = True
+    for c in cols:
+        a = pdf[c].to_numpy()
+        out[1:] |= a[1:] != a[:-1]
+    return out
+
+
+def _anchor_starts(pdf: pd.DataFrame, forced: np.ndarray, width: int) -> list:
+    """The greedy anchor scan (reference loop src/agg/stream.rs:60-97) over
+    ts-DESC rows: a point joins the open bucket while ``anchor - ts <=
+    width`` and otherwise re-anchors a new one; rows flagged in ``forced``
+    (``forced[0]`` must be set) always re-anchor — group changes, and the
+    sliced path's block and tail starts. Returns bucket start indices.
+    Plain python lists: numpy scalar indexing in a loop is ~20x slower."""
+    starts = []
+    anchor = 0
+    ts = pdf["ts"].to_numpy(dtype=np.int64).tolist()
+    for i, (t, f) in enumerate(zip(ts, forced.tolist())):
+        if f or anchor - t > width:
+            starts.append(i)
+            anchor = t
+    return starts
+
+
+def _reanchor_rule(pdf: pd.DataFrame, width: int):
+    """Boundary rule of the shipped semantics (see
+    :func:`_greedy_segment_ids`), as ``(starts, keep, open_end)`` for
+    :func:`_greedy_stream`: every row kept, the last bucket always open."""
+    return _anchor_starts(pdf, _breaks(pdf, "grp"), width), None, True
+
+
+def _drop_rule(pdf: pd.DataFrame, width: int):
+    """The reference's actual boundary rule (src/agg/stream.rs:81-86, see
+    :func:`_greedy_segment_ids_drop_boundary`) restarted at every group
+    change: the bucket-closing point joins NOTHING (``keep`` False) and
+    clears the anchor, and the following point initializes the next
+    bucket (stream.rs:67-73 — a group's first point never drops).
+    ``open_end`` is False when the frame's last row was dropped: every
+    bucket is then final, since no anchor is left for a later point."""
+    ts = pdf["ts"].to_numpy(dtype=np.int64).tolist()
+    keep = [True] * len(ts)
+    starts = []
+    anchor = None
+    for i, (t, new) in enumerate(zip(ts, _breaks(pdf, "grp").tolist())):
+        if new or anchor is None:
+            starts.append(i)
+            anchor = t
+        elif anchor - t > width:
+            keep[i] = False
+            anchor = None
+    return starts, keep, anchor is not None
+
+
+def _segment_rows(pdf: pd.DataFrame, starts, kind: str, keep=None) -> pd.DataFrame:
+    """Fold the contiguous segments of a (grp, ts DESC, value ASC)-sorted
+    frame into result rows; segment ``j`` runs from ``starts[j]`` to the
+    next start. ``keep`` (bool per row) first removes rows lying BETWEEN
+    segments — drop-mode boundary points, pass-1 pending rows — and
+    remaps ``starts`` to kept-row positions. Every greedy path folds
+    here, so a bucket's float summation order is the same on all."""
+    starts = np.asarray(starts, dtype=np.int64)
+    if keep is not None:
+        keep = np.asarray(keep, dtype=bool)
+        starts = (np.cumsum(keep) - 1)[starts]
+        pdf = pdf[keep]
+    ts = pdf["ts"].to_numpy(dtype=np.int64)
+    val = pdf["value"].to_numpy(dtype=np.float64)
+    n = len(ts)
+    bounds = np.append(starts, n)
+    lens = np.diff(bounds)
+    # DESC order: segment max ts = first element, min ts = last element.
+    out = pd.DataFrame(
+        {
+            "grp": pdf["grp"].to_numpy()[starts],
+            "start_ts": ts[bounds[1:] - 1],
+            "end_ts": ts[starts],
+            "len": lens,
+        }
+    )
+    pq = percentile_q(kind)
+    if kind == "avg":
+        out["value"] = np.add.reduceat(val, starts) / lens
+    elif kind == "sum":
+        out["value"] = np.add.reduceat(val, starts)
+    elif kind == "min":
+        out["value"] = np.minimum.reduceat(val, starts)
+    elif kind == "max":
+        out["value"] = np.maximum.reduceat(val, starts)
+    elif kind == "count":
+        out["value"] = lens.astype("float64")
+    elif kind == "stddev":
+        # sample stddev per segment; single-point segments -> NaN
+        # (emitted as NULL), matching SQL STDDEV_SAMP
+        out["value"] = [
+            float(np.std(val[bounds[i]: bounds[i + 1]], ddof=1))
+            if lens[i] > 1
+            else None
+            for i in range(len(starts))
+        ]
+    elif pq is not None:
+        # percentile: no reduceat analog — slice per segment.
+        # np.percentile's linear interpolation matches Spark
+        # `percentile` and DuckDB `quantile_cont` exactly.
+        out["value"] = [
+            float(np.percentile(val[bounds[i]: bounds[i + 1]], pq * 100.0))
+            for i in range(len(starts))
+        ]
+    else:
+        raise ValueError(f"unknown aggregation: {kind}")
+    return out[["grp", "start_ts", "end_ts", "value", "len"]]
+
+
+def _greedy_stream(batches, rule, kind: str, width: int, guard: int):
+    """The open-bucket carry every greedy path runs: ``batches`` are
+    (grp, ts DESC, value ASC)-sorted frames in stream order, and
+    ``rule(pdf, width)`` returns ``(starts, keep, open_end)`` for one
+    frame (see :func:`_reanchor_rule`, :func:`_drop_rule`). Closed
+    buckets are folded per batch; the trailing open bucket is carried
+    into the next batch, because whether a point joins depends only on
+    that bucket's anchor (src/agg/stream.rs:76). Folding only closed
+    buckets keeps the float summation order of a whole-group pass. A
+    frame with no open bucket leaves no carry, so the next batch's first
+    point initializes a bucket — the drop rule's post-drop state.
+    ``guard`` caps the carry: a bucket that never closes fails the task
+    loudly instead of OOM-killing the executor."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+            carry = None
+        if pdf.empty:
+            continue
+        starts, keep, open_end = rule(pdf, width)
+        if open_end:
+            # rows from the last start on are all kept: a drop there
+            # would have cleared the anchor or started a later bucket
+            cut = starts[-1]
+            carry = pdf.iloc[cut:]
+            if len(carry) > guard:
+                raise RuntimeError(
+                    f"greedy bucketing: a single data-anchored bucket "
+                    f"exceeds {guard} rows (group {carry['grp'].iloc[0]!r}, "
+                    f"width {width} ns — every point within one width "
+                    f"span). This is inherently sequential per the "
+                    f"reference semantics (src/agg/stream.rs:60-97); use "
+                    f"aligned mode or a smaller granularity for groups "
+                    f"this dense."
+                )
+            pdf, starts = pdf.iloc[:cut], starts[:-1]
+            keep = None if keep is None else keep[:cut]
+        if starts:
+            yield _segment_rows(pdf, starts, kind, keep)
+    if carry is not None and not carry.empty:
+        yield _segment_rows(carry, [0], kind)
+
+
 def greedy_buckets(
     scan: DataFrame,
     group_col: Column,
@@ -383,192 +545,11 @@ def greedy_buckets(
     """
     if boundary not in ("reanchor", "drop"):
         raise ValueError(f"unknown greedy boundary semantics: {boundary!r}")
-    kind_b = kind  # capture for the closure
-    pq = percentile_q(kind)  # float (not a module ref) — safe to capture
-    w = int(width)
-    guard = int(max_open_bucket_rows)
-    drop_b = boundary == "drop"
-
-    # NOTE: the closure must be self-contained (no talna_spark module
-    # references) — executors' Python workers may not have this repo on
-    # their import path, and cloudpickle serializes module-level functions
-    # by reference. Locals + numpy/pandas only.
-    def _boundaries(pdf: pd.DataFrame) -> np.ndarray:
-        # Greedy anchor scan (reference loop src/agg/stream.rs:60-97)
-        # restarted at every group change, over plain python lists (numpy
-        # scalar indexing in a loop is ~20x slower). pdf is sorted by
-        # (grp ASC, ts DESC). Returns segment start indices.
-        ts_list = pdf["ts"].to_numpy(dtype=np.int64).tolist()
-        grp_list = pd.factorize(pdf["grp"].to_numpy())[0].tolist()
-        n = len(ts_list)
-        starts_list = [0]
-        anchor = ts_list[0]
-        g = grp_list[0]
-        for i in range(1, n):
-            t = ts_list[i]
-            gi = grp_list[i]
-            if gi != g or anchor - t > w:
-                starts_list.append(i)
-                anchor = t
-                g = gi
-        return np.asarray(starts_list, dtype=np.int64)
-
-    def _aggregate(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
-        ts = pdf["ts"].to_numpy(dtype=np.int64)
-        val = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(ts)
-        lens = np.diff(np.append(starts, n))
-        # DESC order: segment max ts = first element, min ts = last element.
-        out = pd.DataFrame(
-            {
-                "grp": pdf["grp"].to_numpy()[starts],
-                "start_ts": ts[np.append(starts[1:], n) - 1],
-                "end_ts": ts[starts],
-                "len": lens,
-            }
-        )
-        if kind_b == "avg":
-            out["value"] = np.add.reduceat(val, starts) / lens
-        elif kind_b == "sum":
-            out["value"] = np.add.reduceat(val, starts)
-        elif kind_b == "min":
-            out["value"] = np.minimum.reduceat(val, starts)
-        elif kind_b == "max":
-            out["value"] = np.maximum.reduceat(val, starts)
-        elif kind_b == "count":
-            out["value"] = lens.astype("float64")
-        elif kind_b == "stddev":
-            # sample stddev per segment; single-point segments -> NaN
-            # (emitted as NULL), matching SQL STDDEV_SAMP
-            bounds = np.append(starts, n)
-            out["value"] = [
-                float(np.std(val[bounds[i]: bounds[i + 1]], ddof=1))
-                if lens[i] > 1
-                else None
-                for i in range(len(starts))
-            ]
-        elif pq is not None:
-            # percentile: no reduceat analog — slice per segment.
-            # np.percentile's linear interpolation matches Spark
-            # `percentile` and DuckDB `quantile_cont` exactly.
-            bounds = np.append(starts, n)
-            out["value"] = [
-                float(np.percentile(val[bounds[i]: bounds[i + 1]], pq * 100.0))
-                for i in range(len(starts))
-            ]
-        else:
-            raise ValueError(f"unknown aggregation: {kind_b}")
-        return out[["grp", "start_ts", "end_ts", "value", "len"]]
-
-    def _boundaries_drop(pdf: pd.DataFrame):
-        # Reference drop semantics (src/agg/stream.rs:81-86) restarted
-        # at every group change: the bucket-closing point joins NOTHING
-        # (keep=False) and resets the anchor; the following point
-        # (re)initializes the next segment. Returns (starts, keep,
-        # open_at_end): segment start indices in ORIGINAL coordinates,
-        # a per-row keep flag, and whether the trailing segment is
-        # still open — False means the batch's last row was dropped,
-        # so every segment is final (a future point cannot join an
-        # anchor that no longer exists).
-        ts_list = pdf["ts"].to_numpy(dtype=np.int64).tolist()
-        grp_list = pd.factorize(pdf["grp"].to_numpy())[0].tolist()
-        n = len(ts_list)
-        keep = [True] * n
-        starts_list = [0]
-        anchor = ts_list[0]
-        g = grp_list[0]
-        for i in range(1, n):
-            t = ts_list[i]
-            gi = grp_list[i]
-            if gi != g or anchor is None:
-                # new group, or first point after a drop: initialize
-                # (stream.rs:67-73 — a group's first point never drops)
-                starts_list.append(i)
-                anchor = t
-                g = gi
-            elif anchor - t <= w:
-                pass  # joins (stream.rs:76-80; anchor never updated)
-            else:
-                # stream.rs:81-86 — bucket returned, point lands NOWHERE
-                keep[i] = False
-                anchor = None
-        return starts_list, keep, anchor is not None
-
-    def _aggregate_drop(
-        pdf: pd.DataFrame, starts, keep
-    ) -> pd.DataFrame:
-        # Dropped boundary points sit BETWEEN segments (never inside
-        # one), so filtering them keeps each segment contiguous; remap
-        # the start indices to kept-row coordinates and reuse the
-        # shared aggregation (identical float summation order).
-        keep_arr = np.asarray(keep, dtype=bool)
-        starts_arr = np.asarray(starts, dtype=np.int64)
-        if keep_arr.all():
-            return _aggregate(pdf, starts_arr)
-        rank = np.cumsum(keep_arr) - 1
-        return _aggregate(
-            pdf.iloc[np.flatnonzero(keep_arr)], rank[starts_arr]
-        )
-
-    def _guard_fail(carry: pd.DataFrame):
-        raise RuntimeError(
-            f"greedy bucketing: a single data-anchored bucket exceeds "
-            f"{guard} rows (group {carry['grp'].iloc[0]!r}, width {w} ns "
-            f"— every point within one width span). This is inherently "
-            f"sequential per the reference semantics "
-            f"(src/agg/stream.rs:60-97); use aligned mode or a smaller "
-            f"granularity for groups this dense."
-        )
-
-    def _bucketize_drop(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            starts, keep, open_end = _boundaries_drop(pdf)
-            if not open_end:
-                # last row of the batch was dropped: all segments final,
-                # and the empty carry makes the next batch's first point
-                # initialize — exactly the reference's post-drop state.
-                yield _aggregate_drop(pdf, starts, keep)
-                continue
-            cut = int(starts[-1])
-            # rows at/after the last start are all kept: a drop there
-            # would have forced either open_end=False or a later start
-            carry = pdf.iloc[cut:]
-            if len(carry) > guard:
-                _guard_fail(carry)
-            if cut:
-                yield _aggregate_drop(pdf.iloc[:cut], starts[:-1], keep[:cut])
-        if carry is not None and not carry.empty:
-            yield _aggregate(carry, np.asarray([0], dtype=np.int64))
+    rule = _drop_rule if boundary == "drop" else _reanchor_rule
+    w, guard = int(width), int(max_open_bucket_rows)
 
     def _bucketize(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            starts = _boundaries(pdf)
-            # The trailing segment is the open bucket of the trailing
-            # group — its membership can still change with the next Arrow
-            # batch (a not-much-older point may join, or close it); every
-            # earlier segment is final. Emit the closed ones, carry the
-            # open one. Aggregating only closed segments keeps the float
-            # summation order identical to a whole-group pass.
-            cut = int(starts[-1])
-            carry = pdf.iloc[cut:]
-            if len(carry) > guard:
-                _guard_fail(carry)
-            if cut:
-                yield _aggregate(pdf.iloc[:cut], starts[:-1])
-        if carry is not None and not carry.empty:
-            yield _aggregate(carry, np.asarray([0], dtype=np.int64))
+        return _greedy_stream(batches, rule, kind, w, guard)
 
     prepared = (
         scan.select(group_col.alias("grp"), "ts", "value")
@@ -581,9 +562,7 @@ def greedy_buckets(
         # The reference leaves heap ties arbitrary (src/merge.rs:9-13).
         .sortWithinPartitions("grp", F.desc("ts"), F.asc("value"))
     )
-    return prepared.mapInPandas(
-        _bucketize_drop if drop_b else _bucketize, schema=RESULT_SCHEMA
-    )
+    return prepared.mapInPandas(_bucketize, schema=RESULT_SCHEMA)
 
 
 def _sliced_prepared(scan: DataFrame, group_col: Column, slice_width: int) -> DataFrame:
@@ -700,6 +679,17 @@ def greedy_auto_decision(
     return True, int(slice_w), stats
 
 
+def _tail_rule(pdf: pd.DataFrame, width: int):
+    """Pass-2 boundary rule of :func:`greedy_buckets_sliced`: the
+    re-anchor rule plus a forced re-anchor at every pass-1 open-tail
+    start (a true bucket boundary — pass 1 found it after a forced
+    reset)."""
+    tail = pdf["tail"].to_numpy(dtype=bool)
+    forced = _breaks(pdf, "grp")
+    forced[1:] |= tail[1:] & (~tail[:-1] | _breaks(pdf, "slice")[1:])
+    return _anchor_starts(pdf, forced, width), None, True
+
+
 def greedy_buckets_sliced(
     scan: DataFrame,
     group_col: Column,
@@ -759,55 +749,7 @@ def greedy_buckets_sliced(
             "slice_width must exceed the bucket width (a slice shorter "
             "than one bucket can never contain a forced reset)"
         )
-    kind_b = kind
-    pq = percentile_q(kind)
-    w = int(width)
-    guard = int(max_open_bucket_rows)
-
-    # NOTE: closures must be self-contained (numpy/pandas + captured
-    # locals only) — executors' Python workers don't import talna_spark.
-    # _agg_frame is a LOCAL captured by value in both pass closures.
-    def _agg_frame(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
-        # identical aggregation (and float order) to greedy_buckets
-        ts = pdf["ts"].to_numpy(dtype=np.int64)
-        val = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(ts)
-        lens = np.diff(np.append(starts, n))
-        out = pd.DataFrame(
-            {
-                "grp": pdf["grp"].to_numpy()[starts],
-                "start_ts": ts[np.append(starts[1:], n) - 1],
-                "end_ts": ts[starts],
-                "len": lens,
-            }
-        )
-        if kind_b == "avg":
-            out["value"] = np.add.reduceat(val, starts) / lens
-        elif kind_b == "sum":
-            out["value"] = np.add.reduceat(val, starts)
-        elif kind_b == "min":
-            out["value"] = np.minimum.reduceat(val, starts)
-        elif kind_b == "max":
-            out["value"] = np.maximum.reduceat(val, starts)
-        elif kind_b == "count":
-            out["value"] = lens.astype("float64")
-        elif kind_b == "stddev":
-            bounds = np.append(starts, n)
-            out["value"] = [
-                float(np.std(val[bounds[i]: bounds[i + 1]], ddof=1))
-                if lens[i] > 1
-                else None
-                for i in range(len(starts))
-            ]
-        elif pq is not None:
-            bounds = np.append(starts, n)
-            out["value"] = [
-                float(np.percentile(val[bounds[i]: bounds[i + 1]], pq * 100.0))
-                for i in range(len(starts))
-            ]
-        else:
-            raise ValueError(f"unknown aggregation: {kind_b}")
-        return out[["grp", "start_ts", "end_ts", "value", "len"]]
+    w, guard = int(width), int(max_open_bucket_rows)
 
     _P1_SCHEMA = (
         "grp string, slice long, final boolean, tail boolean, ts long, "
@@ -830,80 +772,56 @@ def greedy_buckets_sliced(
 
         def process(pdf: pd.DataFrame):
             # every (grp, slice) block in pdf is COMPLETE; rows sorted
-            # (grp, slice, ts DESC, value ASC) by the upstream shuffle
+            # (grp, slice, ts DESC, value ASC) by the upstream shuffle.
+            # A gap > w inside a block forces a re-anchor whatever came
+            # before it, so from the block's first such gap on the scan
+            # is entry-independent: its closed buckets are final here,
+            # while the rows before that gap (head) and the block's last
+            # bucket (open tail) go to pass 2 as pending rows.
             n = len(pdf)
-            grp_a = pdf["grp"].to_numpy()
-            sl_a = pdf["slice"].to_numpy(dtype=np.int64)
+            block = _breaks(pdf, "grp", "slice")
             ts_a = pdf["ts"].to_numpy(dtype=np.int64)
-            new_block = np.empty(n, dtype=bool)
-            new_block[0] = True
-            new_block[1:] = (grp_a[1:] != grp_a[:-1]) | (sl_a[1:] != sl_a[:-1])
-            bounds = np.flatnonzero(new_block).tolist() + [n]
-            ts_l = ts_a.tolist()
-            pend = np.zeros(n, dtype=bool)
-            tailm = np.zeros(n, dtype=bool)
-            mid_starts: list = []  # absolute starts of CLOSED segments
-            for bi in range(len(bounds) - 1):
-                b0, b1 = bounds[bi], bounds[bi + 1]
-                first_reset = None
-                for i in range(b0 + 1, b1):
-                    if ts_l[i - 1] - ts_l[i] > w:
-                        first_reset = i
-                        break
-                if first_reset is None:
-                    # no forced reset: whole block is entry-dependent head
-                    pend[b0:b1] = True
-                    continue
-                anchor = ts_l[first_reset]
-                last = first_reset
-                for i in range(first_reset + 1, b1):
-                    if anchor - ts_l[i] > w:
-                        mid_starts.append(last)  # segment [last, i) closed
-                        last = i
-                        anchor = ts_l[i]
-                pend[b0:first_reset] = True   # head
-                pend[last:b1] = True          # open tail
-                tailm[last:b1] = True
-            parts = []
-            if pend.any():
-                sub = pdf[pend]
-                # int64 SENTINEL zeros, not nulls, in the long columns:
-                # a nullable long would round-trip Arrow->pandas as
-                # float64 in pass 2 and ns timestamps (> 2^53) would
-                # silently lose precision; the `final` flag is the
-                # discriminator, never these fields
-                parts.append(pd.DataFrame(
-                    {
-                        "grp": sub["grp"].to_numpy(),
-                        "slice": sub["slice"].to_numpy(),
-                        "final": False,
-                        "tail": tailm[pend],
-                        "ts": sub["ts"].to_numpy(),
-                        "raw": sub["value"].to_numpy(),
-                        "start_ts": np.zeros(len(sub), dtype=np.int64),
-                        "end_ts": np.zeros(len(sub), dtype=np.int64),
-                        "value": np.nan,
-                        "len": np.zeros(len(sub), dtype=np.int64),
-                    }
-                )[cols])
-            if mid_starts:
-                # compact the mid rows; segments stay contiguous and the
-                # last closed segment of a block ends exactly where the
-                # next block's first closed segment begins in mid-space,
-                # so one global reduceat reproduces the per-block folds
-                # slice-for-slice (same float order as the one-task path)
-                ms = np.asarray(mid_starts, dtype=np.int64)
-                mid = pdf[~pend].reset_index(drop=True)
-                midpos = np.cumsum(~pend) - 1
-                agg = _agg_frame(mid, midpos[ms])
-                agg.insert(1, "slice", sl_a[ms])
+            starts = np.asarray(_anchor_starts(pdf, block, w), dtype=np.int64)
+            gap = np.zeros(n, dtype=bool)
+            gap[1:] = (ts_a[:-1] - ts_a[1:] > w) & ~block[1:]
+            n_gaps = np.cumsum(gap)
+            # synced: at or after the first gap of the row's block
+            synced = n_gaps > n_gaps[block][np.cumsum(block) - 1]
+            last = np.append(block[starts[1:]], True)  # block's last bucket
+            tailm = synced & np.repeat(last, np.diff(np.append(starts, n)))
+            pend = ~synced | tailm
+            mid_starts = starts[synced[starts] & ~last]  # final buckets
+            sub = pdf[pend]  # never empty: a block's first row is pending
+            # int64 SENTINEL zeros, not nulls, in the long columns:
+            # a nullable long would round-trip Arrow->pandas as
+            # float64 in pass 2 and ns timestamps (> 2^53) would
+            # silently lose precision; the `final` flag is the
+            # discriminator, never these fields
+            parts = [pd.DataFrame(
+                {
+                    "grp": sub["grp"].to_numpy(),
+                    "slice": sub["slice"].to_numpy(),
+                    "final": False,
+                    "tail": tailm[pend],
+                    "ts": sub["ts"].to_numpy(),
+                    "raw": sub["value"].to_numpy(),
+                    "start_ts": np.zeros(len(sub), dtype=np.int64),
+                    "end_ts": np.zeros(len(sub), dtype=np.int64),
+                    "value": np.nan,
+                    "len": np.zeros(len(sub), dtype=np.int64),
+                }
+            )[cols]]
+            if len(mid_starts):
+                # the final buckets are contiguous runs of the non-pending
+                # rows, so one fold over those reproduces the per-block
+                # folds (same float order as the one-task path)
+                agg = _segment_rows(pdf, mid_starts, kind, keep=~pend)
+                agg.insert(1, "slice", pdf["slice"].to_numpy()[mid_starts])
                 agg.insert(2, "final", True)
                 agg.insert(3, "tail", False)
                 agg.insert(4, "ts", np.zeros(len(agg), dtype=np.int64))
                 agg.insert(5, "raw", np.nan)
                 parts.append(agg[cols])
-            if not parts:
-                return None
             return pd.concat(parts, ignore_index=True)[cols]
 
         # The open block is accumulated as a LIST of batch frames and
@@ -926,14 +844,10 @@ def greedy_buckets_sliced(
             sl_a = pdf["slice"].to_numpy(dtype=np.int64)
             if pending and (grp_a[0], int(sl_a[0])) != last_key:
                 # block boundary at the batch junction: pending complete
-                out = process(_one(pending))
+                yield process(_one(pending))
                 pending = []
-                if out is not None:
-                    yield out
             last_key = (grp_a[-1], int(sl_a[-1]))
-            chg = np.flatnonzero(
-                (grp_a[1:] != grp_a[:-1]) | (sl_a[1:] != sl_a[:-1])
-            )
+            chg = np.flatnonzero(_breaks(pdf, "grp", "slice")[1:])
             if len(chg) == 0:
                 pending.append(pdf)  # one (possibly continuing) block — hold
                 continue
@@ -941,61 +855,15 @@ def greedy_buckets_sliced(
             pending.append(pdf.iloc[:cut])
             block = _one(pending)
             pending = [pdf.iloc[cut:].reset_index(drop=True)]
-            out = process(block)
-            if out is not None:
-                yield out
+            yield process(block)
         if pending:
-            block = _one(pending)
-            if not block.empty:
-                out = process(block)
-                if out is not None:
-                    yield out
+            yield process(_one(pending))
 
     def _pass2(batches):
-        # sequential stitch over PENDING rows only (r17: finals exit via
-        # the parallel filter branch and never reach this operator),
-        # batch-carried like greedy_buckets._bucketize, with forced
-        # re-anchor at tail starts.
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            ts_list = pdf["ts"].to_numpy(dtype=np.int64).tolist()
-            grp_list = pd.factorize(pdf["grp"].to_numpy())[0].tolist()
-            sl_list = pdf["slice"].to_numpy(dtype=np.int64).tolist()
-            tl_list = pdf["tail"].to_numpy(dtype=bool).tolist()
-            n = len(ts_list)
-            starts_list = [0]
-            anchor = ts_list[0]
-            g = grp_list[0]
-            for i in range(1, n):
-                forced = tl_list[i] and (
-                    not tl_list[i - 1] or sl_list[i - 1] != sl_list[i]
-                )
-                if grp_list[i] != g or forced or anchor - ts_list[i] > w:
-                    starts_list.append(i)
-                    anchor = ts_list[i]
-                    g = grp_list[i]
-            starts = np.asarray(starts_list, dtype=np.int64)
-            cut = int(starts[-1])
-            carry = pdf.iloc[cut:]
-            if len(carry) > guard:
-                raise RuntimeError(
-                    f"greedy bucketing: a single data-anchored bucket exceeds "
-                    f"{guard} rows — every point within one width span; use "
-                    f"aligned mode for groups this dense."
-                )
-            if cut:
-                body = pdf.iloc[:cut].rename(columns={"raw": "value"})[
-                    ["grp", "ts", "value"]
-                ]
-                yield _agg_frame(body, starts[:-1])
-        if carry is not None and not carry.empty:
-            body = carry.rename(columns={"raw": "value"})[["grp", "ts", "value"]]
-            yield _agg_frame(body, np.asarray([0], dtype=np.int64))
+        # sequential stitch over pass-1 PENDING rows only (finals exit
+        # via the parallel filter branch and never reach this operator)
+        values = (pdf.rename(columns={"raw": "value"}) for pdf in batches)
+        return _greedy_stream(values, _tail_rule, kind, w, guard)
 
     prepared = _sliced_prepared(scan, group_col, slice_width)
     # r16: ONE shuffle keyed on (grp, slice) — hash repartition spreads

@@ -601,16 +601,6 @@ class QueryBuilder:
         uniquely keyed by their observed min/max ts."""
         from talna_spark.aggregate import sliding_buckets
 
-        if (
-            self._gapfill is not None
-            or self._rolling is not None
-            or self._zscore is not None
-        ):
-            raise InvalidQueryError(
-                "sliding cannot combine with gapfill/rolling/zscore"
-            )
-        if self._mode != "aligned":
-            raise InvalidQueryError("sliding requires aligned mode")
         if self._granularity_set:
             raise InvalidQueryError(
                 "sliding ignores granularity — it takes width/slide directly; "
@@ -621,12 +611,11 @@ class QueryBuilder:
             raise InvalidQueryError(
                 "sliding requires width > 0, slide > 0, width % slide == 0"
             )
-        node = parse_filter_query(self._filter)
-        scan = self._db._backend.scan(self._metric, node, self._start, self._end)
-        scan = self._group_drop_filter(scan)
         if self._kind not in ("avg", "sum", "min", "max", "count"):
             raise InvalidQueryError("sliding supports the five basic aggregations")
-        return sliding_buckets(scan, self._group_col(), self._kind, w, s)
+        return sliding_buckets(
+            self._terminal_scan("sliding"), self._group_col(), self._kind, w, s
+        )
 
     def histogram(self, lo: float, hi: float, nbins: int) -> DataFrame:
         """Per-bucket value histogram (extension: the Prometheus/Datadog
@@ -642,21 +631,9 @@ class QueryBuilder:
             raise InvalidQueryError(
                 "histogram requires the count() entry point"
             )
-        if self._mode != "aligned":
-            raise InvalidQueryError("histogram requires aligned mode")
-        if (
-            self._gapfill is not None
-            or self._rolling is not None
-            or self._zscore is not None
-        ):
-            raise InvalidQueryError(
-                "histogram cannot combine with gapfill/rolling/zscore"
-            )
-        node = parse_filter_query(self._filter)
-        scan = self._db._backend.scan(self._metric, node, self._start, self._end)
-        scan = self._group_drop_filter(scan)
         return histogram_buckets(
-            scan, self._group_col(), self._granularity, lo, hi, nbins
+            self._terminal_scan("histogram"), self._group_col(),
+            self._granularity, lo, hi, nbins,
         )
 
     def sessions(self, gap_ns: int) -> DataFrame:
@@ -667,16 +644,6 @@ class QueryBuilder:
         only; the five basic aggregations apply per session."""
         from talna_spark.aggregate import session_buckets
 
-        if (
-            self._gapfill is not None
-            or self._rolling is not None
-            or self._zscore is not None
-        ):
-            raise InvalidQueryError(
-                "sessions cannot combine with gapfill/rolling/zscore"
-            )
-        if self._mode != "aligned":
-            raise InvalidQueryError("sessions requires aligned mode")
         if self._granularity_set:
             raise InvalidQueryError(
                 "sessions ignores granularity — the gap defines boundaries; "
@@ -686,10 +653,55 @@ class QueryBuilder:
             raise InvalidQueryError("session gap must be positive")
         if self._kind not in ("avg", "sum", "min", "max", "count"):
             raise InvalidQueryError("sessions supports the five basic aggregations")
-        node = parse_filter_query(self._filter)
+        return session_buckets(
+            self._terminal_scan("sessions"), self._group_col(), self._kind,
+            int(gap_ns),
+        )
+
+    def _require_aligned(self, op: str) -> None:
+        """``op`` needs aligned mode and none of the fixed-width bucket
+        post-passes (gapfill/rolling/zscore)."""
+        if self._mode != "aligned":
+            raise InvalidQueryError(f"{op} requires aligned mode")
+        if (
+            self._gapfill is not None
+            or self._rolling is not None
+            or self._zscore is not None
+        ):
+            raise InvalidQueryError(
+                f"{op} cannot combine with gapfill/rolling/zscore"
+            )
+
+    def _terminal_scan(self, op: str) -> DataFrame:
+        """Scan for the terminal ops (sliding/histogram/sessions), which
+        aggregate it with their own keys: aligned mode only, and no
+        alternative grouping or bucketing (cube/rollup_sets/calendar)."""
+        self._require_aligned(op)
+        if self._cube or self._calendar is not None:
+            raise InvalidQueryError(
+                f"{op} cannot combine with cube/rollup_sets/calendar"
+            )
+        return self._scan()
+
+    def _scan(self, node=None) -> DataFrame:
+        """The query's point scan: backend scan of the metric, filter
+        (``node``, parsed here when omitted) and time bounds, series
+        lacking a group tag dropped (O25), then the :meth:`where_value`
+        row predicate."""
+        if node is None:
+            node = parse_filter_query(self._filter)  # may raise InvalidQueryError
         scan = self._db._backend.scan(self._metric, node, self._start, self._end)
         scan = self._group_drop_filter(scan)
-        return session_buckets(scan, self._group_col(), self._kind, int(gap_ns))
+        if self._value_pred is not None:
+            import operator as _op
+
+            op, x = self._value_pred
+            fn = {
+                ">": _op.gt, ">=": _op.ge, "<": _op.lt,
+                "<=": _op.le, "==": _op.eq, "!=": _op.ne,
+            }[op]
+            scan = scan.filter(fn(F.col("value"), F.lit(x)))
+        return scan
 
     def _group_keys(self) -> tuple[str, ...]:
         gb = self._group_by
@@ -756,29 +768,10 @@ class QueryBuilder:
             rollup_df = self._try_rollup(node)
             if rollup_df is not None:
                 return self._apply_rolling(self._apply_gapfill(rollup_df))
-        scan = self._db._backend.scan(self._metric, node, self._start, self._end)
+        scan = self._scan(node)
         group_col = self._group_col()
-        scan = self._group_drop_filter(scan)
-        if self._value_pred is not None:
-            import operator as _op
-
-            op, x = self._value_pred
-            fn = {
-                ">": _op.gt, ">=": _op.ge, "<": _op.lt,
-                "<=": _op.le, "==": _op.eq, "!=": _op.ne,
-            }[op]
-            scan = scan.filter(fn(F.col("value"), F.lit(x)))
         if self._cube:
-            if self._mode != "aligned":
-                raise InvalidQueryError("cube requires aligned mode")
-            if (
-                self._gapfill is not None
-                or self._rolling is not None
-                or self._zscore is not None
-            ):
-                raise InvalidQueryError(
-                    "cube cannot combine with gapfill/rolling/zscore"
-                )
+            self._require_aligned("cube")
         kind = self._kind
         if kind == "rate":
             # per-series derivative first; buckets then average the
@@ -830,17 +823,8 @@ class QueryBuilder:
             scan = scan.withColumn("_cube_grp", F.explode(F.array(*combos)))
             group_col = F.col("_cube_grp")
         if self._calendar is not None:
-            if self._mode != "aligned":
-                raise InvalidQueryError("calendar requires aligned mode")
-            if (
-                self._gapfill is not None
-                or self._rolling is not None
-                or self._zscore is not None
-            ):
-                raise InvalidQueryError(
-                    "calendar cannot combine with gapfill/rolling/zscore "
-                    "(their bucket spines/frames assume a fixed width)"
-                )
+            # gapfill/rolling/zscore spines and frames assume a fixed width
+            self._require_aligned("calendar")
         if self._mode == "greedy":
             from talna_spark.aggregate import approx_percentile_q
 
@@ -876,16 +860,13 @@ class QueryBuilder:
                         scan, group_col, self._granularity,
                         sample_fraction=self._greedy_auto_sample,
                     )
-                    if not use_sliced:
-                        self._greedy_auto_choice = ("single", None, stats)
-                        return greedy_buckets(
-                            scan, group_col, kind, self._granularity,
-                            boundary=self._greedy_boundary,
-                        )
-                    self._greedy_auto_choice = ("sliced", slice_w, stats)
-                return greedy_buckets_sliced(
-                    scan, group_col, kind, self._granularity, slice_w,
-                )
+                    self._greedy_auto_choice = (
+                        "sliced" if use_sliced else "single", slice_w, stats
+                    )
+                if slice_w is not None:
+                    return greedy_buckets_sliced(
+                        scan, group_col, kind, self._granularity, slice_w,
+                    )
             return greedy_buckets(
                 scan, group_col, kind, self._granularity,
                 boundary=self._greedy_boundary,
@@ -1163,6 +1144,21 @@ class Database:
     def _invalidate_plans(self) -> None:
         self._plan_cache.clear()
 
+    def _warehouse(self, op: str) -> "WarehouseBackend":
+        """The warehouse backend, or InvalidQueryError naming ``op``."""
+        if not isinstance(self._backend, WarehouseBackend):
+            raise InvalidQueryError(f"{op} requires a warehouse-backed Database")
+        return self._backend
+
+    def _reload(self) -> None:
+        """Re-open the warehouse after its files changed: a fresh fact
+        reader (and with it a fresh file listing) under the same tag-index
+        preference, and no cached plan over the old files. A session-wide
+        clearCache would evict unrelated cached DataFrames."""
+        wh = self._backend
+        wh.__init__(self.spark, wh.path, wh._tag_index_pref)
+        self._invalidate_plans()
+
     @staticmethod
     def builder() -> DatabaseBuilder:
         return DatabaseBuilder()
@@ -1198,15 +1194,10 @@ class Database:
     def compact(self) -> None:
         """Run warehouse maintenance: series-dim compaction + tag-index
         refresh (talna_spark.maintenance)."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("compact requires a warehouse-backed Database")
         from talna_spark.maintenance import compact
 
-        compact(self.spark, self._backend.path)
-        self._backend.__init__(
-            self.spark, self._backend.path, self._backend._tag_index_pref
-        )
-        self._invalidate_plans()
+        compact(self.spark, self._warehouse("compact").path)
+        self._reload()
 
     def stats(self) -> DataFrame:
         """Warehouse inventory: per-metric point count, distinct series,
@@ -1214,15 +1205,14 @@ class Database:
         reads before sizing queries or retention. One partial-aggregated
         scan over facts plus the (small) series dim; at cluster scale
         this is the job you schedule nightly, not per query."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("stats requires a warehouse-backed Database")
-        facts = self._backend.facts.groupBy("metric").agg(
+        wh = self._warehouse("stats")
+        facts = wh.facts.groupBy("metric").agg(
             F.count(F.lit(1)).alias("n_points"),
             F.countDistinct("ts_day").alias("n_days"),
             F.min("ts").alias("min_ts"),
             F.max("ts").alias("max_ts"),
         )
-        series = self._backend.series.groupBy("metric").agg(
+        series = wh.series.groupBy("metric").agg(
             F.countDistinct("series_id").alias("n_series")
         )
         return facts.join(series, "metric", "left").select(
@@ -1233,18 +1223,10 @@ class Database:
         """Retention: drop fact (and rollup) partitions for days entirely
         before ``cutoff_ns`` (day-granular; metadata-only deletes — see
         talna_spark.maintenance.expire). Returns partitions removed."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("expire requires a warehouse-backed Database")
         from talna_spark.maintenance import expire
 
-        n = expire(self.spark, self._backend.path, int(cutoff_ns))
-        # backend re-init is enough: every query builds a fresh reader (and
-        # with it a fresh file listing), same invalidation as compact() —
-        # a session-wide clearCache would evict unrelated cached DataFrames
-        self._backend.__init__(
-            self.spark, self._backend.path, self._backend._tag_index_pref
-        )
-        self._invalidate_plans()
+        n = expire(self.spark, self._warehouse("expire").path, int(cutoff_ns))
+        self._reload()
         return n
 
     def build_rollup(self, width_ns: int) -> None:
@@ -1254,11 +1236,9 @@ class Database:
         never consulted for bounds/kinds they can't answer exactly, but a
         rollup built before an append does NOT see the new points — refresh
         belongs in the same maintenance cadence as compact())."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("build_rollup requires a warehouse-backed Database")
         from talna_spark.rollup import build_rollup
 
-        build_rollup(self.spark, self._backend.path, int(width_ns))
+        build_rollup(self.spark, self._warehouse("build_rollup").path, int(width_ns))
         # a cached plan built before this rollup existed keeps using the
         # raw scan (correct, just unoptimized); drop the cache so repeat
         # queries get the rewrite — and so no cached ROLLUP-reading plan
@@ -1271,13 +1251,11 @@ class Database:
         (talna_spark.rollup changelog) — maintenance cost scales with new
         data, not table size. Falls back to a full rebuild after
         compaction (the dedup can touch unknown partitions)."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError(
-                "refresh_rollup requires a warehouse-backed Database"
-            )
         from talna_spark.rollup import refresh_rollup
 
-        refresh_rollup(self.spark, self._backend.path, int(width_ns))
+        refresh_rollup(
+            self.spark, self._warehouse("refresh_rollup").path, int(width_ns)
+        )
         self._invalidate_plans()  # same staleness contract as build_rollup
 
     def register_views(self, prefix: str = "talna") -> None:
@@ -1309,16 +1287,10 @@ class Database:
         warehouse. ``persist=False`` skips caching the enriched batch —
         faster when the source is cheap to recompute (see
         ingest.write_batch)."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("write_batch requires a warehouse-backed Database")
         from talna_spark.ingest import write_batch
 
-        write_batch(points, self._backend.path, persist=persist)
-        # refresh the dimension view
-        self._backend.__init__(
-            self.spark, self._backend.path, self._backend._tag_index_pref
-        )
-        self._invalidate_plans()
+        write_batch(points, self._warehouse("write_batch").path, persist=persist)
+        self._reload()
 
     def write(self, metric: str, value: float, tags: dict) -> None:
         """Ingest one point at now() (reference ``Database::write``,

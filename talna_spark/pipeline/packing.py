@@ -81,9 +81,7 @@ def pack_assign_lengths(
     b = int(budget)
     stride = _SHARD_STRIDE
 
-    # NOTE: the closure must be self-contained (no talna_spark references)
-    # — executors' Python workers don't have this repo on their import
-    # path. Plain lists: FFD is pointer-chasing, numpy buys nothing.
+    # Plain lists: FFD is pointer-chasing, numpy buys nothing.
     def _ffd(pdf):
         import pandas as pd
 

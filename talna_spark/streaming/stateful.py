@@ -27,13 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+from talna_spark.schema import RESULT_SCHEMA
 
 STATE_SCHEMA = StructType(
     [
@@ -43,16 +39,6 @@ STATE_SCHEMA = StructType(
         StructField("acc_min", DoubleType()),
         StructField("acc_max", DoubleType()),
         StructField("n", LongType()),
-    ]
-)
-
-OUT_SCHEMA = StructType(
-    [
-        StructField("grp", StringType()),
-        StructField("start_ts", LongType()),
-        StructField("end_ts", LongType()),
-        StructField("value", DoubleType()),
-        StructField("len", LongType()),
     ]
 )
 
@@ -76,7 +62,6 @@ def greedy_rollup_stream(
     kind_b = kind
     w = int(width_ns)
 
-    # closure must be self-contained (executors lack this repo on sys.path)
     def _roll(key, pdfs, state):
         import pandas as pd  # noqa: F401 (worker-side import)
 
@@ -147,7 +132,7 @@ def greedy_rollup_stream(
     )
     return prepared.groupBy("grp").applyInPandasWithState(
         _roll,
-        outputStructType=OUT_SCHEMA,
+        outputStructType=RESULT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

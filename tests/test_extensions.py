@@ -714,3 +714,29 @@ def test_histogram_validations(spark):
         db.count("app.purchase", "user").histogram(5, 5, 4)
     with pytest.raises(InvalidQueryError, match="aligned"):
         db.count("app.purchase", "user").mode("greedy").histogram(0, 1, 4)
+
+
+def test_terminal_ops_apply_where_value(spark):
+    # sliding/histogram/sessions aggregate the scan themselves; each must
+    # see only the points where_value keeps, exactly as if the rejected
+    # points had never been written
+    rows = [("m", i * S, float(i), {"h": "a"}) for i in range(10)]
+    db = Database.from_points(spark, make_points(spark, rows))
+    kept = Database.from_points(
+        spark, make_points(spark, [r for r in rows if r[2] > 4.5])
+    )
+    ops = [
+        ("sum", lambda q: q.sliding(4 * S, 2 * S)),
+        ("count", lambda q: q.histogram(0, 10, 5)),
+        ("sum", lambda q: q.sessions(2 * S)),
+    ]
+    for kind, op in ops:
+        got = op(getattr(db, kind)("m", "h").where_value(">", 4.5))
+        want = op(getattr(kept, kind)("m", "h"))
+        assert sorted(got.collect()) == sorted(want.collect()), kind
+
+
+def test_terminal_ops_reject_alternative_grouping(spark):
+    db = Database.from_points(spark, make_points(spark, [("m", 0, 1.0, {"h": "a"})]))
+    with pytest.raises(InvalidQueryError, match="calendar"):
+        db.sum("m", "h").calendar("day").sliding(2 * S, S)

@@ -326,6 +326,24 @@ def test_sliced_greedy_dense_degrades_to_sequential(spark):
     ) == _collect_buckets(greedy_buckets(pts, grp, "avg", S))
 
 
+def test_sliced_greedy_open_bucket_guard(spark):
+    # the dense fixture under a width spanning every point: no forced
+    # reset anywhere, so pass 2 carries one bucket that never closes and
+    # must fail loudly like the one-task path
+    from pyspark.sql import functions as F
+
+    from talna_spark.aggregate import greedy_buckets_sliced
+
+    dense = [int(i * 0.6 * S) for i in range(40)]
+    pts = make_points(spark, _rows(dense)).filter(F.col("metric") == "m")
+    df = greedy_buckets_sliced(
+        pts, F.col("tags").getItem("h"), "avg", 30 * S, 60 * S,
+        max_open_bucket_rows=4,
+    )
+    with pytest.raises(Exception, match="aligned mode"):
+        df.collect()
+
+
 def test_sliced_greedy_via_builder_on_events(spark):
     # end-to-end through the QueryBuilder knob on the realistic corpus:
     # sliced output equals the default greedy path exactly
